@@ -605,16 +605,7 @@ object Analytics {
     val child = eagerAtScaleSession(s, dir)
     Seq("orders", "customer")
       .foreach(n => t(child, dir, n).createOrReplaceTempView(n))
-    val df = child.sql(eagerLeftOuterSql)
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAgg,
-      Join => LJoin}
-    val plan = df.queryExecution.optimizedPlan
-    val pushed = plan.collect { case j: LJoin =>
-      j.children.exists(_.collectFirst { case a: LAgg => a }.isDefined)
-    }.exists(identity)
-    require(pushed,
-      "left-outer eager aggregation did not push below the join:\n" + plan)
-    df
+    child.sql(eagerLeftOuterSql)
   }
 
   // ---------------------------------------------------------------- q241
@@ -625,8 +616,8 @@ object Analytics {
     * fold changes only addition order (the reordering partial
     * aggregation already performs; here the values are integer-valued
     * doubles, so even that is exact, and the oracle hash pins it).
-    * Decimal averages stand down in the rule. Plan-guarded: the
-    * partial aggregate must sit below the join. */
+    * Decimal averages stand down in the rule. `PlanShapeSpec` pins
+    * the partial aggregate below the join. */
   val eagerAvgSql: String =
     """SELECT o_orderpriority,
       |  AVG(l_quantity) AS avg_qty,
@@ -639,16 +630,7 @@ object Analytics {
     val child = eagerAtScaleSession(s, dir)
     Seq("lineitem", "orders")
       .foreach(n => t(child, dir, n).createOrReplaceTempView(n))
-    val df = child.sql(eagerAvgSql)
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAgg,
-      Join => LJoin}
-    val plan = df.queryExecution.optimizedPlan
-    val pushed = plan.collect { case j: LJoin =>
-      j.children.exists(_.collectFirst { case a: LAgg => a }.isDefined)
-    }.exists(identity)
-    require(pushed,
-      "AVG eager aggregation did not push below the join:\n" + plan)
-    df
+    child.sql(eagerAvgSql)
   }
 
   // ---------------------------------------------------------------- q238
@@ -663,9 +645,9 @@ object Analytics {
     * The rule then pre-shrinks lineitem below the joins, so the
     * multi-distinct Expand×3 runs over order-grain rows instead of
     * fact-grain — the n+1-fold CPU cut that matters at 100 TB.
-    * Plan-guarded in-query: a partial aggregate must sit BELOW a join,
-    * and every Expand must sit above a pre-shrinking Aggregate (the
-    * unrewritten plan Expands directly over the fact-grain join).
+    * `PlanShapeSpec` pins a partial aggregate BELOW a join and every
+    * Expand above a pre-shrinking Aggregate (the unrewritten plan
+    * Expands directly over the fact-grain join).
     * The oracle pins exactness — decimal partial sums are associative,
     * so the two-level fold is bit-identical. */
   private val eagerDistinctSessions =
@@ -684,20 +666,7 @@ object Analytics {
     })
     Seq("lineitem", "orders", "customer")
       .foreach(n => t(child, dir, n).createOrReplaceTempView(n))
-    val df = child.sql(segmentRevenueSql)
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAgg,
-      Expand => LExpand, Join => LJoin}
-    val plan = df.queryExecution.optimizedPlan
-    val pushed = plan.collect { case j: LJoin =>
-      j.children.exists(_.collectFirst { case a: LAgg => a }.isDefined)
-    }.exists(identity)
-    require(pushed, "eager aggregation did not push below the join:\n" + plan)
-    val expandsShrunk = plan.collect { case e: LExpand =>
-      e.child.collectFirst { case a: LAgg => a }.isDefined
-    }.forall(identity)
-    require(expandsShrunk,
-      "a distinct Expand still runs over fact-grain rows:\n" + plan)
-    df
+    child.sql(segmentRevenueSql)
   }
 
   // ---------------------------------------------------------------- q74

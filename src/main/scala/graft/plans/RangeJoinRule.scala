@@ -33,14 +33,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
   * rewrite is row-correct for any positive width: null or inverted
   * bounds generate buckets that the exact predicate then empties,
   * matching the nested-loop result; a width so far below an
-  * interval's span that one row would explode into more than
-  * `spark.graft.rangeJoin.maxBucketsPerRow` (default 100k) buckets
-  * fails fast with the knob named rather than materializing the
-  * degenerate array. Fires only on INNER joins with deterministic
-  * conditions and numeric bounds, and never on a join that already
-  * has a cross-side equality (those hash-partition fine as-is, with
-  * the range predicate evaluated inside the equi join); it inserts an
-  * equality conjunct, so it cannot re-fire on its own output.
+  * interval's span that one row would explode into more than 100k
+  * buckets fails fast with the width knob named rather than
+  * materializing the degenerate array. Fires only on INNER joins with
+  * deterministic conditions and numeric bounds, and never on a join
+  * that already has a cross-side equality (those hash-partition fine
+  * as-is, with the range predicate evaluated inside the equi join); it
+  * inserts an equality conjunct, so it cannot re-fire on its own
+  * output.
   */
 /** The shared shape detector for the range-join optimizations: the
   * rule ([[RangeJoinRule]]) and the broadcast strategy
@@ -98,7 +98,7 @@ case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan]
     with PredicateHelper {
 
   private val WidthConf = "spark.graft.rangeJoin.bucketWidth"
-  private val MaxBucketsConf = "spark.graft.rangeJoin.maxBucketsPerRow"
+  private val MaxBuckets = 100000L
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     // toDoubleOption: a malformed width must read as "disabled", not
@@ -110,10 +110,6 @@ case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan]
           rewrite(j, w).getOrElse(j)
       }
     }
-
-  private def maxBuckets: Long =
-    spark.conf.getOption(MaxBucketsConf).flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(100000L)
 
   private def rewrite(j: Join, w: Double): Option[LogicalPlan] =
     RangeJoinPattern.unapply(j).map { case (v, lo, hi, pointIsLeft) =>
@@ -147,12 +143,12 @@ case class RangeJoinRule(spark: SparkSession) extends Rule[LogicalPlan]
         Or(Or(IsNull(bLo), IsNull(bHi)), LessThan(bHi, bLo)),
         Literal.create(Array.empty[Long], seq.dataType),
         If(
-          LessThanOrEqual(Subtract(bHi, bLo), Literal(maxBuckets)),
+          LessThanOrEqual(Subtract(bHi, bLo), Literal(MaxBuckets)),
           seq,
           Cast(new RaiseError(Literal(
             s"range-join bucketization would explode an interval into more " +
-              s"than $maxBuckets buckets; raise $WidthConf (or " +
-              s"$MaxBucketsConf) or disable the rule")), seq.dataType)))
+              s"than $MaxBuckets buckets; raise $WidthConf or disable the " +
+              "rule")), seq.dataType)))
       val intervalGen = Generate(
         Explode(guarded),
         unrequiredChildIndex = Nil, outer = false, qualifier = None,

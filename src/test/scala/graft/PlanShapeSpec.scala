@@ -362,6 +362,32 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(planText(exact).contains("expand")) // the contrast that motivates q116
   }
 
+  // The eager-aggregation queries, planned (never run) at both test
+  // scales, so a plan change that appears only above some table size
+  // still shows here. A rule that stands down keeps the answer and
+  // costs only time, so nothing but these specs catches it.
+  private val testdata = sf.stripSuffix("/sf0.001")
+  private val eagerQueries = Seq("q237_eager_agg_join",
+    "q238_eager_distinct_sqltext", "q240_eager_left_outer",
+    "q241_eager_avg_join")
+
+  for (scale <- Seq("sf0.01", "sf0.1"); q <- eagerQueries)
+    test(s"$q pushes its partial aggregate below the join at $scale") {
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Join}
+      val plan = SparkEntry.queries(q)(spark, s"$testdata/$scale")
+        .queryExecution.optimizedPlan
+      val pushed = plan.collect { case j: Join =>
+        j.children.exists(_.collectFirst { case a: Aggregate => a }.isDefined)
+      }.exists(identity)
+      assert(pushed, s"eager aggregation did not push below the join:\n$plan")
+      // q238: every distinct Expand runs over pre-shrunk rows
+      val expandsShrunk = plan.collect { case e: Expand =>
+        e.child.collectFirst { case a: Aggregate => a }.isDefined
+      }.forall(identity)
+      assert(expandsShrunk,
+        s"a distinct Expand still runs over fact-grain rows:\n$plan")
+    }
+
   test("q67/q71/q72 join-back statistics stay equi-join (never cartesian)") {
     Seq(
       "q67" -> graft.llm.LlmQueries.dupNgrams(spark, sf),

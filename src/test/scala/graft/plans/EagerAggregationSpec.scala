@@ -214,22 +214,37 @@ class EagerAggregationSpec extends AnyFunSuite {
 
   test("verified-unique dim behind Filter and pass-through Project " +
       "still proves; an aliased/computed key does not") {
+    // a repartition (round-robin or hashed) moves dim rows between
+    // partitions and changes none: the proof must survive it
+    def hints(key: String) =
+      Seq("", "/*+ REPARTITION(4) */", s"/*+ REPARTITION(4, $key) */")
+    def filtered(hint: String) =
+      s"""SELECT grp, SUM(qty) AS s FROM ea.ns.fact
+         |JOIN (SELECT $hint pk, grp FROM ea.ns.dim WHERE w >= 0) d
+         |  ON fk = d.pk
+         |GROUP BY grp ORDER BY grp""".stripMargin
+    val off = withRule(on = false)(spark.sql(filtered("")).collect().toSeq)
     withRule(on = true) {
-      val filtered = spark.sql(
-        """SELECT grp, SUM(qty) AS s FROM ea.ns.fact
-          |JOIN (SELECT pk, grp FROM ea.ns.dim WHERE w >= 0) d ON fk = d.pk
-          |GROUP BY grp""".stripMargin)
-      assert(aggsBelowJoin(filtered),
-        "filter/projection over the dim must preserve the proof")
+      for (hint <- hints("pk")) {
+        val df = spark.sql(filtered(hint))
+        assert(aggsBelowJoin(df),
+          s"filter/projection/repartition over the dim must preserve " +
+            s"the proof ($hint):\n${df.queryExecution.optimizedPlan}")
+        assert(df.collect().toSeq == off,
+          s"eager aggregation changed results ($hint)")
+      }
       // NB: `pk + 0` would constant-fold back to the attribute before
       // the rule runs (legitimately provable) — use a non-injective
       // expression, which must never inherit the proof
-      val computed = spark.sql(
-        """SELECT grp, SUM(qty) AS s FROM ea.ns.fact
-          |JOIN (SELECT pk % 100 AS pk2, grp FROM ea.ns.dim) d ON fk = d.pk2
-          |GROUP BY grp""".stripMargin)
-      assert(!aggsBelowJoin(computed),
-        "a computed key column must not inherit the proof")
+      for (hint <- hints("pk2")) {
+        val computed = spark.sql(
+          s"""SELECT grp, SUM(qty) AS s FROM ea.ns.fact
+             |JOIN (SELECT $hint pk % 100 AS pk2, grp FROM ea.ns.dim) d
+             |  ON fk = d.pk2
+             |GROUP BY grp""".stripMargin)
+        assert(!aggsBelowJoin(computed),
+          s"a computed key column must not inherit the proof ($hint)")
+      }
     }
   }
 

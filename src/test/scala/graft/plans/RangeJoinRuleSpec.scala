@@ -103,7 +103,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     }
   }
 
-  test("an interval exploding past maxBucketsPerRow fails fast, named knob") {
+  test("an interval exploding past the bucket cap fails fast, named knob") {
     val wide = Seq((1L, 0L, 10_000_000L)).toDF("iid", "lo", "hi")
     withWidth("1") {
       val e = intercept[Exception] {
